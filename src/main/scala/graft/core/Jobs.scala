@@ -14,9 +14,11 @@ package graft.core
   *
   * Contract: the thunks must be independent (no thunk reads state
   * another writes) — the callers here write to DISTINCT paths or
-  * checkpoint DISTINCT plans. The first failure propagates; remaining
-  * thunks may still be running when it does (their writes go to paths
-  * the failed caller abandons).
+  * checkpoint DISTINCT plans. On the first failure, thunks that have not
+  * started are cancelled and running ones are awaited before that
+  * failure is rethrown: once the call returns, no sibling is still
+  * writing to a path the failed caller abandons (a staging directory a
+  * retry is about to overwrite).
   */
 object Jobs {
 
@@ -36,16 +38,25 @@ object Jobs {
           t
         }
       })
+    val done = new java.util.concurrent.ExecutorCompletionService[A](pool)
+    val futures = thunks.map(t =>
+      done.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
     try {
-      val futures = thunks.map(t =>
-        pool.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
-      futures.map { f =>
-        try f.get()
+      // completion order, so the first failure is seen as soon as it lands
+      thunks.foreach { _ =>
+        try done.take().get()
         catch { // unwrap so callers see the job's own failure
           case e: java.util.concurrent.ExecutionException =>
             throw Option(e.getCause).getOrElse(e)
         }
       }
+      futures.map(_.get())
+    } catch {
+      case e: Throwable =>
+        futures.foreach(_.cancel(false)) // not started: never runs
+        pool.shutdown()
+        while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.SECONDS)) ()
+        throw e
     } finally pool.shutdown()
   }
 }

@@ -285,6 +285,30 @@ class AnnIndexSpec extends SparkTestBase {
     assert(!AnnIndex.appendDelta(spark, extra, "vec_id", "embedding", p, "d3"))
   }
 
+  test("compact below minDeltas returns a manifest snapshot that a later refresh cannot change") {
+    val p = graft.io.IoScratch.dir + "/ann_compact_snapshot"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
+      .delete(new org.apache.hadoop.fs.Path(p), true)
+    val a = embs.filter(col("vec_id") < 300)
+    val b1 = embs.filter(col("vec_id") >= 300 && col("vec_id") < 400)
+    val b2 = embs.filter(col("vec_id") >= 400)
+    AnnIndex.export(spark, a, "vec_id", "embedding", p,
+      cells = 4, lloydIters = 3, m = 4, ks = 4, pqIters = 3)
+    assert(AnnIndex.appendDelta(spark, b1, "vec_id", "embedding", p, "d1"))
+    def vectorRows(m: org.apache.spark.sql.DataFrame): Long =
+      m.filter(col("component") === "vectors").agg(sum("rows")).as[Long].head()
+    // one delta below minDeltas = 2: no fold, the current manifest is held
+    val held = AnnIndex.compact(spark, p, minDeltas = 2)
+    // a refreshing absorb rewrites the manifest files under the held frame
+    assert(AnnIndex.appendDelta(spark, b2, "vec_id", "embedding", p, "d2",
+      refreshManifest = true))
+    assert(vectorRows(spark.read.parquet(s"${AnnIndex.resolve(spark, p)}/manifest"))
+      == embs.count(), "the refresh counts the new delta")
+    assert(vectorRows(held) == a.count() + b1.count(),
+      "the held manifest keeps the counts as of the compact call")
+  }
+
   test("out-of-band compact: a delta committed DURING the fold migrates into the new version") {
     val p = graft.io.IoScratch.dir + "/ann_compact_race1"
     val ref = graft.io.IoScratch.dir + "/ann_compact_race1_ref"

@@ -138,6 +138,32 @@ class HybridIndexSpec extends SparkTestBase {
     assert(viaDf == viaSeq)
   }
 
+  test("compact below minDeltas returns a manifest snapshot that a later refresh cannot change") {
+    val p = graft.io.IoScratch.dir + "/hybrid_compact_snapshot"
+    val hconf = spark.sparkContext.hadoopConfiguration
+    new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
+      .delete(new org.apache.hadoop.fs.Path(p), true)
+    val thirds = (0 until 3).map(i => docs.filter(col("doc_id") % 3 === i))
+    def vecsOf(d: org.apache.spark.sql.DataFrame) =
+      embs.join(d.select(col("doc_id").as("vec_id")), "vec_id")
+    HybridIndex.export(spark, thirds(0), "doc_id", "text",
+      vecsOf(thirds(0)), "vec_id", "embedding", p)
+    assert(HybridIndex.appendDelta(spark, thirds(1), "doc_id", "text",
+      vecsOf(thirds(1)), "vec_id", "embedding", p, "d1"))
+    def vectorRows(m: org.apache.spark.sql.DataFrame): Long =
+      m.as[(String, Long)].collect().toMap.apply("vectors")
+    // one delta below minDeltas = 2: no fold, the current manifest is held
+    val held = HybridIndex.compact(spark, p, minDeltas = 2)
+    // a refreshing absorb rewrites the manifest files under the held frame
+    assert(HybridIndex.appendDelta(spark, thirds(2), "doc_id", "text",
+      vecsOf(thirds(2)), "vec_id", "embedding", p, "d2", refreshManifest = true))
+    assert(vectorRows(spark.read.parquet(
+        s"${graft.similarity.AnnIndex.resolve(spark, p)}/manifest"))
+      == vecsOf(docs).count(), "the refresh counts the new delta")
+    assert(vectorRows(held) == vecsOf(thirds(0)).count() + vecsOf(thirds(1)).count(),
+      "the held manifest keeps the counts as of the compact call")
+  }
+
   test("out-of-band compact: late and raced hybrid deltas land exactly-once in the winner") {
     val p = graft.io.IoScratch.dir + "/hybrid_compact_race"
     val hconf = spark.sparkContext.hadoopConfiguration
